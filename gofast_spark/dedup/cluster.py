@@ -24,14 +24,11 @@ Scale notes (the reason this shape was chosen):
   Components in MapReduce and Beyond", SoCC 2014) converges in
   O(log² n) rounds and would be the upgrade path; it is not needed for
   dedup workloads.
-- Lineage is truncated every iteration via ``localCheckpoint`` —
-  without it the plan doubles per round and Catalyst analysis time
-  explodes by iteration ~10 (same driver-loop discipline as
-  ``gofast_spark.ml.optim.gradient_descent``).
-- Convergence is detected by summing per-vertex change flags as an
-  OBSERVED metric of the per-round checkpoint materialization — zero
-  extra actions, zero extra shuffles (r16; min-propagation is
-  monotone, so "changed" == "strictly decreased").
+- Each round's labels are pinned (:mod:`gofast_spark.pin`); without
+  it the plan doubles per round and Catalyst analysis time explodes by
+  iteration ~10.  The convergence test is the pin's observed sum of
+  per-vertex change flags — no extra job (min-propagation is monotone,
+  so "changed" == "strictly decreased").
 
 Reference analog: none — the reference (earthai-tech/gofast) has only
 exact ``handle_duplicates`` (gofast/dataops/quality.py:4677); clustered
@@ -42,6 +39,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from gofast_spark.pin import pin, pin_observed
 
 
 def connected_components(
@@ -74,35 +73,25 @@ def connected_components(
     a = F.col(id_a).alias("src")
     b = F.col(id_b).alias("dst")
     # symmetric edge list; distinct keeps Σ degree² honest on multi-edges
-    edges = (
+    edges = pin(
         pairs.select(a, b)
         .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    labels = (
+    labels = pin(
         edges.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("lab", F.col("id"))
-        .localCheckpoint(eager=True)
     )
-    from pyspark.sql import Observation
-
     lab_type = labels.schema["lab"].dataType
     converged = False
     for _ in range(max_iter):
-        # r16 round shape (guide §2.4): ONE union + ONE min-groupBy per
-        # round instead of join + groupBy + join-back.  The old form
-        # aggregated neighbour mins per vertex and OUTER-JOINED them
-        # back onto the label frame — a second exchange of the
-        # node-sized frame per round.  min over ({own label} ∪
-        # {neighbour labels}) is the identical update; the own-label
-        # leg carries the previous label through max(__old) (exactly
-        # one leg-1 row per vertex, leg-2 rows carry NULL), so the
-        # change flag needs no join either.  The convergence sum rides
-        # the checkpoint materialization as an observed metric — zero
-        # extra jobs per round (min-propagation is monotone, so
-        # "changed" == "strictly decreased").
+        # ONE union + ONE min-groupBy per round (no join-back, so the
+        # node-sized frame is exchanged once): min over ({own label} ∪
+        # {neighbour labels}) is the update; the own-label leg carries
+        # the previous label through max(__old) (exactly one leg-1 row
+        # per vertex, leg-2 rows carry NULL), so the change flag needs
+        # no join either.
         own = labels.select(
             "id", F.col("lab"), F.col("lab").alias("__old")
         )
@@ -116,8 +105,7 @@ def connected_components(
             F.col("nlab").alias("lab"),
             F.lit(None).cast(lab_type).alias("__old"),
         )
-        obs = Observation()
-        new_labels = (
+        new_labels, m = pin_observed(
             own.unionByName(nbr)
             .groupBy("id")
             .agg(F.min("lab").alias("lab"), F.max("__old").alias("__old"))
@@ -125,13 +113,11 @@ def connected_components(
                 "id",
                 "lab",
                 (F.col("lab") < F.col("__old")).cast("long").alias("__chg"),
-            )
-            .observe(obs, F.coalesce(F.sum("__chg"), F.lit(0)).alias("chg"))
-            .localCheckpoint(eager=True)
+            ),
+            chg=F.coalesce(F.sum("__chg"), F.lit(0)),
         )
-        changed = obs.get["chg"]
         labels = new_labels.drop("__chg")
-        if changed == 0:
+        if m["chg"] == 0:
             converged = True
             break
     if not converged:
@@ -214,44 +200,31 @@ def connected_components_two_phase(
     checkpointed frames)."""
     # vertex universe from the RAW pairs (a vertex with only a self-loop
     # must still surface as a singleton, matching connected_components)
-    verts = (
+    verts = pin(
         pairs.select(F.col(id_a).alias("id"))
         .union(pairs.select(F.col(id_b).alias("id")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # initial edges ORIENTED u > v and distinct — half the rows of the
     # old symmetric start, and the round functions' input contract:
     # _large_star reconstructs the symmetric view with a dupe-free
     # union, so the old per-round symmetrize-distinct exchange is gone
-    from pyspark.sql import Observation
-
-    obs0 = Observation()
-    e = (
+    e, m = pin_observed(
         pairs.select(
             F.greatest(F.col(id_a), F.col(id_b)).alias("u"),
             F.least(F.col(id_a), F.col(id_b)).alias("v"),
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
     )
-    # carry the edge count across rounds as an OBSERVED metric of the
-    # checkpoint materialization itself (r16): the count used to be a
-    # separate 2-job action per round on the just-materialized frame;
-    # the subtract only runs once counts stabilize (Python `and`
+    # the edge count is carried across rounds from each pin; the
+    # subtract only runs once counts stabilize (Python `and`
     # short-circuits)
-    n_e = obs0.get["n"]
+    n_e = m["n"]
     converged = False
     for _ in range(max_iter):
-        obs = Observation()
-        e2 = (
-            _small_star(_large_star(e))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        n_e2 = obs.get["n"]
+        e2, m = pin_observed(_small_star(_large_star(e)))
+        n_e2 = m["n"]
         same = n_e2 == n_e and e2.subtract(e).count() == 0
         e = e2
         n_e = n_e2
@@ -320,16 +293,18 @@ def keep_canonical(
     cluster min.  On a duplicate-HEAVY corpus the clustered population
     approaches the corpus and an unconditional broadcast would blow the
     build side (the minhash verify stage had exactly this failure mode),
-    so the broadcast is gated on a row-count check — cheap here because
-    the connected-components output is already checkpoint-materialized.
-    The default bound (500k rows, ~tens of MB serialized) is a BYTES
-    proxy chosen to stay far from executor broadcast limits; pass
-    ``broadcast_limit=None`` to force the broadcast."""
-    cl = clusters.select(
-        F.col("id").alias("__cc_id"),
-        F.col(cluster_id_col).alias("__cc_lab"),
+    so the broadcast is gated on the cluster frame's row count, observed
+    while pinning it (no extra job).  The default bound (500k rows,
+    ~tens of MB serialized) is a BYTES proxy chosen to stay far from
+    executor broadcast limits; pass ``broadcast_limit=None`` to always
+    broadcast."""
+    cl, m = pin_observed(
+        clusters.select(
+            F.col("id").alias("__cc_id"),
+            F.col(cluster_id_col).alias("__cc_lab"),
+        )
     )
-    if broadcast_limit is None or clusters.count() <= broadcast_limit:
+    if broadcast_limit is None or m["n"] <= broadcast_limit:
         cl = F.broadcast(cl)
     return (
         df.join(cl, df[id_col] == F.col("__cc_id"), "left")
@@ -389,8 +364,9 @@ def leakage_safe_split(
     together, so the leak count is structurally zero.
 
     Plan: cluster labels join into the corpus by id (broadcast-gated —
-    the label frame covers only docs with at least one near-dup edge);
-    the split itself is a codegen filter.  Returns (train, test)."""
+    the label frame covers only docs with at least one near-dup edge;
+    ``broadcast_limit=None`` always broadcasts); the split itself is a
+    codegen filter.  Returns (train, test)."""
     from gofast_spark.operators.sampling import hash_bucket
 
     clusters = near_dup_clusters(
@@ -402,10 +378,12 @@ def leakage_safe_split(
         num_hashes=num_hashes,
         rows_per_band=rows_per_band,
     )
-    cl = clusters.select(
-        F.col("id").alias("__cc_id"), F.col("cluster_id").alias("__cc_lab")
+    cl, m = pin_observed(
+        clusters.select(
+            F.col("id").alias("__cc_id"), F.col("cluster_id").alias("__cc_lab")
+        )
     )
-    if broadcast_limit is None or clusters.count() <= broadcast_limit:
+    if broadcast_limit is None or m["n"] <= broadcast_limit:
         cl = F.broadcast(cl)
     keyed = df.join(cl, df[id_col] == F.col("__cc_id"), "left").withColumn(
         "__gkey", F.coalesce(F.col("__cc_lab"), F.col(id_col))
@@ -436,10 +414,13 @@ def keep_best(
     frame joined to the corpus scores): one max-score aggregate then a
     min-id aggregate among the maximizers — deterministic for any
     orderable id type, no window.  The corpus-side plan stays one
-    (gated-broadcast) left join + filter, same as keep_canonical."""
-    cl = clusters.select(
-        F.col("id").alias("__cc_id"),
-        F.col(cluster_id_col).alias("__cc_lab"),
+    (gated-broadcast) left join + filter, same as keep_canonical
+    (``broadcast_limit=None`` always broadcasts)."""
+    cl, m = pin_observed(
+        clusters.select(
+            F.col("id").alias("__cc_id"),
+            F.col(cluster_id_col).alias("__cc_lab"),
+        )
     )
     scored = cl.join(
         df.select(
@@ -454,8 +435,7 @@ def keep_best(
         .groupBy("__cc_lab")
         .agg(F.min("__cc_id").alias("__win"))
     )
-    small = broadcast_limit is None or clusters.count() <= broadcast_limit
-    if small:
+    if broadcast_limit is None or m["n"] <= broadcast_limit:
         cl = F.broadcast(cl)
         winners = F.broadcast(winners)
     return (

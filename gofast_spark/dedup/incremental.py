@@ -34,6 +34,7 @@ from gofast_spark.dedup.minhash import (
     lsh_band_keys,
     minhash_signatures_from_sets,
 )
+from gofast_spark.pin import pin
 
 
 def near_dup_pairs_between(
@@ -127,7 +128,7 @@ def _pairs_between_plan(
         # candidates are bounded by Σ |new bucket| x |ref bucket| —
         # checkpointing them materializes the persisted set frames in
         # the same job, so the verify stage below re-reads cached sets
-        cand = cand.localCheckpoint(eager=True)
+        cand = pin(cand)
     # verify: semi-filter each set frame to its candidate ids, then
     # exact Jaccard row-locally per pair
     xa = sets_new.join(
@@ -152,7 +153,7 @@ def _pairs_between_plan(
         # materialize while the set frames are still persisted (the
         # caller unpersists on return); a checkpoint holds no
         # CacheManager entry, so no caller-side unpersist obligation
-        out = out.localCheckpoint(eager=True)
+        out = pin(out)
     return out
 
 

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gofast_spark.pin import pin, pin_observed
 from gofast_spark.text.analysis import normalize_text
 from gofast_spark.text.hashing import md5_hash64
 
@@ -454,7 +455,7 @@ def near_dup_pairs(
     docs, and Jaccard is ``array_intersect`` per pair row — no groupBy.
 
     With ``eager`` (default) the tiny signature and candidate frames are
-    materialized via ``localCheckpoint`` while the set frame is cached,
+    pinned (:mod:`gofast_spark.pin`) while the set frame is cached,
     and the set frame is **unpersisted before returning**, so repeated
     calls in a long session cannot accumulate executor storage (ADVICE
     r2): a checkpoint holds no CacheManager entry, and its blocks are
@@ -537,28 +538,22 @@ def near_dup_pairs(
         sig = minhash_signatures_from_sets(
             sets_df, id_col, num_hashes=num_hashes
         )
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        cand = (
+        cand, m = pin_observed(
             lsh_candidate_pairs(
                 sig, id_col,
                 num_hashes=num_hashes, rows_per_band=rows_per_band,
             )
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
         )
-        # the pair count rides the checkpoint materialization as an
-        # observed metric (r16: was a separate count job); it gates
-        # whether the full set arrays may ride the broadcast build side
-        # — and the candidate-ID frame too: its rows are bounded by 2x
-        # pairs, so on a duplicate-heavy corpus it approaches corpus
-        # cardinality and must not be broadcast unconditionally either
-        # (ADVICE r5, same failure mode as the set frames)
-        small = obs.get["n"] <= broadcast_candidate_limit
-        return _verify(
-            sets_df, cand, bcast_ids=small, bcast_sets=small
-        ).localCheckpoint(eager=True)
+        # the pair count gates whether the full set arrays may ride the
+        # broadcast build side — and the candidate-ID frame too: its
+        # rows are bounded by 2x pairs, so on a duplicate-heavy corpus it
+        # approaches corpus cardinality and must not be broadcast
+        # unconditionally either (ADVICE r5, same failure mode as the
+        # set frames)
+        small = m["n"] <= broadcast_candidate_limit
+        return pin(
+            _verify(sets_df, cand, bcast_ids=small, bcast_sets=small)
+        )
     finally:
         sets_df.unpersist()
 

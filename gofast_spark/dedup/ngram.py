@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gofast_spark.dedup.minhash import doc_shingles
+from gofast_spark.pin import pin
 
 
 def ngram_jaccard_pairs(
@@ -52,9 +53,9 @@ def ngram_jaccard_pairs(
 
     The shingle frame feeds the frequency filter, both block-join legs,
     both verify legs, and the size aggregate; ``eager`` (default)
-    persists it for the run, materializes the small pair list as a
-    ``localCheckpoint`` and unpersists before returning (same storage
-    contract as ``near_dup_pairs``).
+    persists it for the run, pins the small pair list
+    (:func:`gofast_spark.pin.pin`) and unpersists before returning (same
+    storage contract as ``near_dup_pairs``).
     """
     sh = doc_shingles(df, id_col, text_col, k=k)
     if eager:
@@ -62,7 +63,7 @@ def ngram_jaccard_pairs(
     try:
         out = _pairs_from_shingles(sh, id_col, threshold, max_df, eager=eager)
         if eager:
-            return out.localCheckpoint(eager=True)
+            return pin(out)
         return out
     finally:
         if eager:
@@ -116,7 +117,7 @@ def _measured_candidates(
     static plan duplicated its whole upstream (shingle scan + block
     join + pair aggregate ran twice per materialization; cold first
     pass 13.5 s vs 4.5 s at sf0.1).  Under ``eager`` it is now pinned
-    with ONE ``localCheckpoint`` — a narrow candidate-pairs-sized frame
+    with ONE ``pin`` — a narrow candidate-pairs-sized frame
     (bounded by ``max_df * |shingles|``), the same storage contract the
     callers already apply to the final pair list.  Negative result,
     recorded so it is not re-tried: generating pairs via per-shingle
@@ -144,7 +145,7 @@ def _measured_candidates(
     )
     if eager and max_df is not None:
         # referenced by the freq leg AND the final assembly — pin once
-        inter = inter.localCheckpoint(eager=True)
+        inter = pin(inter)
     if max_df is not None:
         fsh = sh.join(
             dfc.where(F.col("__df") > max_df).select("sh_hash"),
@@ -230,7 +231,7 @@ def ngram_containment_pairs(
             sh, id_col, threshold=threshold, max_df=max_df, eager=eager
         )
         if eager:
-            return out.localCheckpoint(eager=True)
+            return pin(out)
         return out
     finally:
         if eager:
@@ -344,7 +345,7 @@ def ngram_dedup_report_from_shingles(
             # the flagged-doc distinct — pin the tiny pair list so the
             # candidate joins replay at most once (same storage contract
             # as the pair functions)
-            meas = meas.localCheckpoint(eager=True)
+            meas = pin(meas)
         counts = meas.agg(
             F.count(F.lit(1)).cast("bigint").alias("n_candidate_pairs"),
             F.coalesce(F.sum(F.col("__j").cast("int")), F.lit(0))

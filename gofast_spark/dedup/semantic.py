@@ -45,6 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gofast_spark.pin import pin
 from gofast_spark.sim.cosine import cosine_sim, l2_norm
 
 
@@ -174,7 +175,7 @@ def semantic_dedup(
         # legs and the final label join-back); without truncation each
         # re-runs the landmark sort, the broadcast assignment window,
         # and the normalization — 3x the pipeline's per-row cost
-        cells = cells.localCheckpoint(eager=True)
+        cells = pin(cells)
     a = cells.select(
         F.col(id_col).alias("__a_id"),
         F.col("__nv").alias("__a_v"),

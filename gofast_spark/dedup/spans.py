@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gofast_spark.pin import pin
 from gofast_spark.text.analysis import normalize_text
 from gofast_spark.text.hashing import md5_hash64
 
@@ -154,7 +155,7 @@ def _spans_from_positions(
     if eager:
         # materialize while `pos` is still persisted (caller unpersists
         # on return); spans are bounded by n_tok / k — small
-        out = out.localCheckpoint(eager=True)
+        out = pin(out)
     return out
 
 

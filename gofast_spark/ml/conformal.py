@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gofast_spark.ml.selection import kfold_assign
+from gofast_spark.pin import pin
 
 _U = 1_000_000
 
@@ -88,7 +89,7 @@ def split_conformal_group_mean(
             )
         )
 
-    cal = residuals(3).localCheckpoint(eager=True)
+    cal = pin(residuals(3))
     n_cal = cal.count()
     if n_cal == 0:
         raise ValueError("empty calibration split")

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gofast_spark.pin import pin_observed
+
 
 def target_encode(
     df: DataFrame,
@@ -37,7 +39,11 @@ def target_encode(
 ) -> DataFrame:
     """Append the smoothed per-category target mean as ``out_col``
     (default ``{cat_col}_te``).  Null categories get the global mean
-    (the fully-shrunk prior)."""
+    (the fully-shrunk prior).
+
+    The category table is broadcast into the apply join when it has at
+    most ``broadcast_limit`` rows; ``broadcast_limit=None`` always
+    broadcasts."""
     if alpha < 0:
         raise ValueError("alpha must be >= 0")
     out = out_col or f"{cat_col}_te"
@@ -56,13 +62,12 @@ def target_encode(
             / (F.col("__n") + F.lit(float(alpha)))
         ).alias(out),
     )
-    if broadcast_limit is not None:
-        # materialize the category-sized table before counting it — the
-        # bare count() re-executed the whole corpus aggregate, and the
-        # apply join would then run it a third time (guide §1.2)
-        enc = enc.localCheckpoint(eager=True)
-        if enc.count() <= broadcast_limit:
-            enc = F.broadcast(enc)
+    # pin the category-sized table: the gate reads its observed row
+    # count, and the apply join reads the pinned rows instead of
+    # re-running the corpus aggregate
+    enc, m = pin_observed(enc)
+    if broadcast_limit is None or m["n"] <= broadcast_limit:
+        enc = F.broadcast(enc)
     return (
         df.join(enc, df[cat_col].eqNullSafe(enc["__cat"]), "left")
         .crossJoin(F.broadcast(prior))
@@ -85,7 +90,9 @@ def woe_encode(
     label: ``ln((good_c + s) / (G + s*k) * (B + s*k) / (bad_c + s))``
     where G/B are global positive/negative totals and k the category
     count — the same smoothed shares ``information_value`` sums over.
-    Unseen/null categories get WOE 0 (no evidence)."""
+    Unseen/null categories get WOE 0 (no evidence).  The category table
+    is broadcast-gated on ``broadcast_limit`` rows as in
+    :func:`target_encode` (``None`` always broadcasts)."""
     out = out_col or f"{cat_col}_woe"
     is_pos = (F.col(label_col) == positive).cast("double")
     labeled = df.where(F.col(label_col).isNotNull())
@@ -106,11 +113,9 @@ def woe_encode(
             / ((F.col("__bad") + s) / (F.col("__b") + s * F.col("__k")))
         ).alias(out),
     )
-    if broadcast_limit is not None:
-        # same materialize-before-count as target_encode (guide §1.2)
-        enc = enc.localCheckpoint(eager=True)
-        if enc.count() <= broadcast_limit:
-            enc = F.broadcast(enc)
+    enc, m = pin_observed(enc)
+    if broadcast_limit is None or m["n"] <= broadcast_limit:
+        enc = F.broadcast(enc)
     return (
         df.join(enc, df[cat_col].eqNullSafe(enc["__cat"]), "left")
         .withColumn(out, F.coalesce(F.col(out), F.lit(0.0)))

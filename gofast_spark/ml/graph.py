@@ -10,10 +10,9 @@ iteration expressed as DataFrame joins:
 Scale shape: each iteration is edges ⋈ ranks on the source key (both
 sides hash-partitioned on the same key, so successive iterations reuse
 the exchange) followed by ONE groupBy on the destination.  Ranks are a
-node-sized frame (<< edges); AQE broadcasts it when small.  Lineage is
-truncated with ``localCheckpoint`` every few rounds so 50-iteration
-runs don't build a quadratic plan (same discipline as
-dedup/cluster.py's hash-min loop).
+node-sized frame (<< edges); AQE broadcasts it when small.  Ranks are
+pinned (:mod:`gofast_spark.pin`) every few rounds so 50-iteration runs
+don't build a quadratic plan.
 
 Dangling nodes: callers pass a symmetric edge set (``undirected=True``
 in :func:`edges_from_pairs`) or accept mass leakage — the standard
@@ -27,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from gofast_spark.pin import pin, pin_observed
 
 
 def edges_from_pairs(
@@ -77,7 +78,7 @@ def pagerank(
     # re-reads it, and without this the upstream plan (scans, joins, the
     # distinct) re-executes per iteration — on the sf0.1 graph that made
     # 5 iterations cost 5 edge builds instead of 1
-    edges = edges.localCheckpoint(eager=True)
+    edges = pin(edges)
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
@@ -139,7 +140,7 @@ def pagerank(
         # mode has one job total; there the periodic cadence is enough.
         last = it + 1 == iterations
         if (broadcast_ranks and not last) or (it + 1) % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = pin(ranks)
     return ranks.select("node", "rank")
 
 
@@ -185,12 +186,11 @@ def label_propagation(
         edges = edges.select("src", "dst").union(
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         ).where(F.col("src") != F.col("dst")).distinct()
-    edges = edges.localCheckpoint(eager=True)
-    labels = (
+    edges = pin(edges)
+    labels = pin(
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("lab", F.col("node"))
-        .localCheckpoint(eager=True)
     )
     for it in range(iterations):
         nbr = edges.join(
@@ -210,7 +210,7 @@ def label_propagation(
         last = it + 1 == iterations
         labels = (
             new_labels if last
-            else new_labels.localCheckpoint(eager=True)
+            else pin(new_labels)
         )
     return labels.select("node", F.col("lab").alias("label"))
 
@@ -227,14 +227,13 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     ``(node, triangles)`` for every vertex of the (symmetrized) input —
     zero for triangle-free nodes; ``agg(sum/3)`` of the column is 3x
     the global triangle count (each triangle credits its 3 corners)."""
-    canon = (
+    canon = pin(
         edges.select(
             F.least("src", "dst").alias("u"),
             F.greatest("src", "dst").alias("v"),
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # wedges u < v < w centered at v, closed by the (u, w) edge
     tri = (
@@ -341,15 +340,12 @@ def link_prediction(
         ).distinct()
     else:
         e = e.distinct()
-    # r16: `e` feeds FOUR legs (degrees, both wedge legs, the adjacency
-    # anti-join) and `deg` three (AA weights, deg_u, deg_v) — left lazy,
-    # the static plan replayed the symmetrize-distinct subtree per leg
-    # (54 Exchanges on the modgraph entry).  Pin both once: edge-sized
-    # and node-sized frames, the triangle_count/checkpoint discipline.
-    e = e.localCheckpoint(eager=True)
-    deg = e.groupBy("src").agg(
-        F.count(F.lit(1)).alias("deg")
-    ).localCheckpoint(eager=True)
+    # `e` feeds FOUR legs (degrees, both wedge legs, the adjacency
+    # anti-join) and `deg` three (AA weights, deg_u, deg_v); left lazy,
+    # the static plan replays the symmetrize-distinct subtree per leg.
+    # Pin both once (edge-sized and node-sized frames).
+    e = pin(e)
+    deg = pin(e.groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
     # wedges u - w - v with u < v through middle w
     a = e.select(F.col("src").alias("w"), F.col("dst").alias("u"))
     b = e.select(F.col("src").alias("w"), F.col("dst").alias("v"))
@@ -430,14 +426,16 @@ def hits_scores(
     half-step)."""
     # edge and node frames feed every half-step: truncate their lineage
     # ONCE so the 2*iterations jobs don't each re-derive them
-    e = edges.select("src", "dst").where(
-        F.col("src") != F.col("dst")
-    ).distinct().localCheckpoint(eager=True)
-    nodes = (
+    e = pin(
+        edges.select("src", "dst")
+        .where(F.col("src") != F.col("dst"))
+        .distinct()
+    )
+    nodes = pin(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
-    ).localCheckpoint(eager=True)
+    )
 
     def rescaled(raw: DataFrame) -> DataFrame:
         # (node, score) view of a checkpointed raw-sum frame: 1-row
@@ -454,11 +452,10 @@ def hits_scores(
         )
 
     def half_raw(score: DataFrame, join_key: str, group_key: str) -> DataFrame:
-        return (
+        return pin(
             e.join(score, e[join_key] == score["node"])
             .groupBy(F.col(group_key).alias("__n"))
             .agg(F.sum(F.col("score").cast("decimal(38,0)")).alias("__raw"))
-            .localCheckpoint(eager=True)
         )
 
     score = nodes.select(
@@ -503,40 +500,26 @@ def kcore_members(
 
     Each round is ONE degree aggregate + two semi-joins on the
     surviving edge set (node-sized keep list, broadcast by AQE when
-    small); the edge frame is ``localCheckpoint``'d per round and the
-    loop stops when the edge count stops changing (the
-    connected-components discipline — a bounded 1-row driver action
-    per round).  Raises after ``max_rounds`` without convergence.
+    small); the edge frame is pinned per round and the loop stops when
+    the edge count (observed by the pin, no extra job) stops
+    changing.  Raises after ``max_rounds`` without convergence.
     Returns ``(node, degree)`` within the k-core."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    from pyspark.sql import Observation
-
     e = edges.select("src", "dst").where(F.col("src") != F.col("dst"))
     if symmetrize:
         e = e.union(e.select(F.col("dst").alias("src"),
                              F.col("src").alias("dst")))
-    # r16: the per-round edge count rides the checkpoint materialization
-    # as an observed metric instead of a separate 2-job action on the
-    # just-materialized frame
-    obs0 = Observation()
-    cur = (
-        e.distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    n_cur = obs0.get["n"]
+    cur, m = pin_observed(e.distinct())
+    n_cur = m["n"]
     for _ in range(max_rounds):
         deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("__deg"))
         keep = deg.where(F.col("__deg") >= k).select("src")
-        obs = Observation()
-        nxt = (
+        nxt, m = pin_observed(
             cur.join(keep, "src", "leftsemi")
             .join(keep.select(F.col("src").alias("dst")), "dst", "leftsemi")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
         )
-        n_nxt = obs.get["n"]
+        n_nxt = m["n"]
         if n_nxt == n_cur:
             break
         cur, n_cur = nxt, n_nxt

@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from gofast_spark.pin import pin, pin_observed
+
 logger = logging.getLogger(__name__)
 
 # Handles persisted by cap_basket_size (default materialize=True path).
@@ -93,9 +95,9 @@ def cap_basket_size(
     partitions, and the downstream pair self-join reads them TWICE
     instead of recomputing the distinct+prune subtree per side — the
     guard then costs roughly what the duplicate subtree used to.
-    ``persist`` (unlike ``localCheckpoint``) KEEPS lineage, so a lost
-    executor recomputes its partitions instead of failing the job —
-    the right trade for a default-on path at cluster scale.
+    ``persist`` (unlike :func:`gofast_spark.pin.pin`) KEEPS lineage, so
+    a lost executor recomputes its partitions instead of failing the
+    job — the right trade for a default-on path at cluster scale.
 
     Cache lifetime: the entry lives in the session's SQL CacheManager
     until unpersisted.  Repeated calls over the SAME input dedupe to
@@ -117,18 +119,12 @@ def cap_basket_size(
     sizes = pruned.groupBy(basket_col).agg(
         F.count(F.lit(1)).alias("__bk_n")
     )
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    # r16: count rides the materialization; when the cap binds, the
-    # anti-join below reads the pinned frame instead of re-running the
-    # size aggregate
-    oversized = (
+    # when the cap binds, the anti-join below reads the pinned frame
+    # instead of re-running the size aggregate
+    oversized, m = pin_observed(
         sizes.where(F.col("__bk_n") > max_basket_size)
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
     )
-    n_over = obs.get["n"]
+    n_over = m["n"]
     if n_over == 0:
         return pruned, 0
     logger.warning(
@@ -162,34 +158,21 @@ def _basket_pairs(
     and ``n_baskets`` is a 1-row frame ``(__nb)`` holding the basket
     count of the SAME corpus the pair counts were taken from (capped
     when the cap binds)."""
-    b = (
+    # the distinct (basket, item) frame feeds the support table, the
+    # prune join, and the basket count: one materialization, three
+    # cheap consumers (guide §1.2: remove repeated passes)
+    b = pin(
         df.select(
             F.col(basket_col).alias("bk"), F.col(item_col).alias("it")
         )
         .where(F.col(basket_col).isNotNull() & F.col(item_col).isNotNull())
         .distinct()
-        # the distinct (basket, item) frame feeds the support table, the
-        # prune join, and the basket count — and the broadcast-gate
-        # count() below otherwise re-executes the corpus distinct from
-        # scratch.  One materialization, four cheap consumers
-        # (guide §1.2: remove repeated passes).
-        .localCheckpoint(eager=True)
     )
-    from pyspark.sql import Observation
-
-    # r16: the gate count used to re-run the support aggregate (count +
-    # prune join = 2 passes over b); pin the frequent-vocab frame once
-    # with its count as an observed metric of the materialization
-    obs = Observation()
+    # pin the frequent-vocab frame: the gate reads its observed count
+    # and the prune join reads the pinned rows (one pass over b)
     support = b.groupBy("it").agg(F.count(F.lit(1)).alias("n_it"))
-    freq = (
-        support.where(F.col("n_it") >= min_support)
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    freq_small = (
-        broadcast_limit is not None and obs.get["n"] <= broadcast_limit
-    )
+    freq, m = pin_observed(support.where(F.col("n_it") >= min_support))
+    freq_small = broadcast_limit is None or m["n"] <= broadcast_limit
     if freq_small:
         freq = F.broadcast(freq)
     pruned, n_dropped = cap_basket_size(
@@ -250,7 +233,9 @@ def frequent_pairs(
     ``min_support`` baskets.  ``lift = n_baskets * n_pair /
     (n_a * n_b)`` (>1 means the items attract).  When
     ``max_basket_size`` binds, every count describes the capped corpus
-    (module docstring)."""
+    (module docstring).  The frequent-item prune join is broadcast when
+    at most ``broadcast_limit`` items are frequent;
+    ``broadcast_limit=None`` always broadcasts."""
     if min_support < 1:
         raise ValueError("min_support must be >= 1")
     pairs, n_baskets = _basket_pairs(
@@ -309,7 +294,9 @@ def association_rules(
     (antecedent, consequent) tie-break.
 
     Returns ``2 * top_pairs`` rows: ``(antecedent, consequent, n_pair,
-    n_ant, n_cons, support, confidence, lift)``.
+    n_ant, n_cons, support, confidence, lift)``.  ``broadcast_limit``
+    gates the prune broadcast as in :func:`frequent_pairs` (``None``
+    always broadcasts).
     """
     if min_support < 1:
         raise ValueError("min_support must be >= 1")

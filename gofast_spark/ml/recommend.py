@@ -43,7 +43,9 @@ def item_similarity_topk(
     ``max_basket_size`` binds, co-occurrence counts AND item supports
     both describe the capped corpus (ml/itemsets.py module docstring),
     so the cosine never mixes capped numerators with uncapped
-    denominators."""
+    denominators.  ``broadcast_limit`` gates the frequent-item prune
+    broadcast as in ``ml.itemsets.frequent_pairs`` (``None`` always
+    broadcasts)."""
     if min_count < 1:
         raise ValueError("min_count must be >= 1")
     if k < 1:

@@ -31,6 +31,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from gofast_spark.pin import pin
+
 
 def distributed_cumsum(
     df: DataFrame,
@@ -47,21 +49,18 @@ def distributed_cumsum(
     the COMBINATION must be globally unique."""
     order = [order_col] if isinstance(order_col, str) else list(order_col)
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    # r16: `part` feeds BOTH the local-window leg and the per-partition
-    # totals leg.  Left lazy, the static plan gave each leg its OWN
-    # range exchange (plan-verified: two rangepartitioning nodes, the
-    # whole upstream scanned twice) — and, worse, each RangePartitioner
-    # samples with an RDD-id-derived seed, so on inputs large enough
-    # for partial sampling the two legs can pick DIFFERENT boundaries,
-    # making `__pid` disagree between the rows and the offsets — a
-    # latent wrong-cumsum hazard that small, fully-sampled inputs never
-    # trigger.  One eager localCheckpoint pins a single exchange and a
-    # single boundary set: exact by construction at any scale, and the
-    # upstream is scanned once instead of twice.
-    part = (
+    # `part` feeds BOTH the local-window leg and the per-partition
+    # totals leg.  Left lazy, the static plan gives each leg its OWN
+    # range exchange (two rangepartitioning nodes, the whole upstream
+    # scanned twice) — and, worse, each RangePartitioner samples with an
+    # RDD-id-derived seed, so on inputs large enough for partial
+    # sampling the two legs can pick DIFFERENT boundaries, making
+    # `__pid` disagree between the rows and the offsets.  One pin fixes
+    # a single exchange and a single boundary set: exact by construction
+    # at any scale, and the upstream is scanned once.
+    part = pin(
         df.repartitionByRange(n, *[F.col(c) for c in order])
         .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     w_local = (
         Window.partitionBy("__pid")

@@ -202,22 +202,6 @@ def shrunkformat(df: DataFrame, n: int = 5) -> DataFrame:
     return df.limit(n)
 
 
-def stratified_sampling(
-    df: DataFrame,
-    strata_col: str,
-    fractions: dict,
-    *,
-    seed: int = 42,
-) -> DataFrame:
-    """Per-stratum sampling.
-
-    Reference: ``batch_sampling`` stratified mode
-    (gofast/utils/data_utils.py:5677).  Native ``sampleBy`` — one pass,
-    no shuffle.
-    """
-    return df.sampleBy(strata_col, fractions, seed)
-
-
 def weighted_sample(
     df: DataFrame,
     id_col: str,

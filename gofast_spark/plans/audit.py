@@ -30,16 +30,6 @@ def plan_string(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def plan_string_formatted(df: DataFrame) -> str:
-    """The ``explain('formatted')`` text (carries ``[codegen id : N]``
-    annotations even on an unexecuted AdaptiveSparkPlan, unlike the raw
-    executedPlan toString)."""
-    jvm = df.sparkSession._jvm
-    return jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def audit_plan(df: DataFrame, *, execute: bool = False) -> dict:
     """Summarize scale-relevant plan features as a flat dict.
 

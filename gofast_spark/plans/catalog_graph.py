@@ -887,7 +887,7 @@ def kcore_members_modgraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-core membership + in-core degree (ml/graph.py kcore_members;
     Seidman 1983) over the symmetrized two-map modular graph —
     iterative peel, one degree aggregate + two semi-joins per round,
-    localCheckpoint'd edge state, convergence-raise discipline."""
+    pinned edge state, convergence-raise discipline."""
     from gofast_spark.ml.graph import kcore_members
 
     return kcore_members(

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gofast_spark.dedup.minhash import MINHASH_COEFFS, MINHASH_P
+from gofast_spark.pin import pin
 from gofast_spark.plans.catalog import _t, query
 from gofast_spark.sim.lsh import hyperplane_weight
 from gofast_spark.text.analysis import EN_STOPWORDS, LANG_STOPWORDS
@@ -2069,7 +2070,7 @@ def _minhash_build(
 ) -> DataFrame:
     """corpus_build_pipeline body with the stage boundary as a knob
     (text/corpus_filter.py stage_boundary): the entry runs the toy
-    localCheckpoint layout; a production build passes a parquet
+    pinned layout; a production build passes a parquet
     path/table prefix and gets the replayable persisted layout —
     tests/test_corpus_build_plans.py exercises BOTH."""
     from gofast_spark.dedup import dedup_near_duplicates
@@ -4069,7 +4070,7 @@ def corpus_build_persisted_stage_survivors(
             spark, sf_dir, stage_sink=f"{base}/stage"
         )
         # pin the result before the stage tables are deleted
-        return out.localCheckpoint(eager=True)
+        return pin(out)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -4088,7 +4089,7 @@ def _containment_build(
 ) -> DataFrame:
     """corpus_build_containment_survivors body with the stage boundary
     as a knob (text/corpus_filter.py stage_boundary; r12 verdict ask
-    #4): stage_sink=None is the toy localCheckpoint layout; a path or
+    #4): stage_sink=None is the toy pinned layout; a path or
     table-name prefix persists each stage as parquet — replayable,
     fault-tolerant, and the downstream keep-filter pushes into the
     scan.  Both layouts are pinned by tests/test_corpus_build_plans.py."""
@@ -4314,7 +4315,7 @@ def corpus_flagship_card_documents(
     # surv feeds TWO sinks (shard/card chain + the inventory count);
     # pin it so the containment pair join replays at most once — the
     # same storage contract as the pair functions (dedup/ngram.py)
-    surv = surv.localCheckpoint(eager=True)
+    surv = pin(surv)
     counts = tagged.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.coalesce(F.sum(F.col("keep").cast("int")), F.lit(0))

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gofast_spark.pin import pin
 from gofast_spark.plans.catalog import _t, query
 
 
@@ -1295,10 +1296,10 @@ def stream_dedup_rate_report_documents(
     # the SAME doc merge by design; two DIFFERENT docs sharing an id
     # collapse here but count twice in the batch count(*).
     # n_exact_unique = distinct non-null normalized texts.
-    stats = docs.agg(
+    stats = pin(docs.agg(
         count_distinct_with_null_group("doc_id").alias("n_docs"),
         F.countDistinct("__t").cast("bigint").alias("n_exact_unique"),
-    ).localCheckpoint(eager=True)
+    ))
     rep = ngram_dedup_report_from_shingles(
         sh,
         "doc_id",
@@ -1341,7 +1342,7 @@ def stream_corpus_flagship_card_documents(
     the naive two-drain layout: (a) a single streaming query drains
     both ledgers (one pass over the source, one state store); (b) the
     keep-FILTER runs post-drain as a doc_id semi-join rather than
-    pre-state — on a stream there is no localCheckpoint barrier, so a
+    pre-state — on a stream there is no pin barrier, so a
     pre-state `where(keep)` collapses the whole filter battery into
     the shingle explode (the r12 53s-vs-4.6s pathology, measured again
     here: 69 s -> 13 s at sf0.1).  The post-drain tail is the SAME
@@ -1391,11 +1392,10 @@ def stream_corpus_flagship_card_documents(
         "doc_id", "keep", "n_tokens"
     )
     kept_ids = docs.where(F.col("keep") == 1).select("doc_id")
-    sh = (
+    sh = pin(
         state.where(F.col("sh_hash").isNotNull())
         .join(kept_ids, "doc_id", "left_semi")
         .select("doc_id", "sh_hash")
-        .localCheckpoint(eager=True)
     )
     counts = docs.agg(
         count_distinct_with_null_group("doc_id").alias("n_docs"),
@@ -1410,11 +1410,10 @@ def stream_corpus_flagship_card_documents(
         .otherwise(F.greatest("id_a", "id_b"))
         .alias("doc_id")
     ).distinct()
-    surv = (
+    surv = pin(
         docs.where(F.col("keep") == 1)
         .select("doc_id", "n_tokens")
         .join(drop, "doc_id", "left_anti")
-        .localCheckpoint(eager=True)
     )
     sharded = token_budget_shards(surv, "doc_id", "n_tokens", budget=2000)
     per = sharded.groupBy("shard").agg(F.sum("n_tokens").alias("tok"))

@@ -17,6 +17,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gofast_spark.pin import pin_observed
+
 
 def minmax_scale(
     df: DataFrame,
@@ -109,11 +111,12 @@ def robust_scale_grouped(
     (per-tenant/per-sensor calibration).  Zero IQR divides by 1.
 
     The stats join is broadcast only while the group count stays under
-    ``broadcast_limit`` (one cheap count over the already-computed
-    aggregate); above it — e.g. per-user calibration with 100M users —
-    the hint would force a driver collect+broadcast OOM, so the join
-    falls back to a shuffle and AQE picks the strategy.
-    ``broadcast_limit=None`` forces the hint unconditionally."""
+    ``broadcast_limit`` (the row count observed while pinning the
+    aggregate, no extra job); above it — e.g. per-user calibration
+    with 100M users — the hint would force a driver collect+broadcast
+    OOM, so the join falls back to a shuffle and AQE picks the
+    strategy.
+    ``broadcast_limit=None`` always broadcasts."""
     aggs = []
     for c in columns:
         col = F.col(c)
@@ -124,21 +127,10 @@ def robust_scale_grouped(
             )
         )
     stats = df.groupBy(*group_cols).agg(*aggs)
-    if broadcast_limit is not None:
-        # materialize the group-sized stats before the gate — a bare
-        # count() would re-execute the exact-percentile aggregate over
-        # the corpus, and the apply join would run it again (guide
-        # §1.2).  r16: the gate count rides the checkpoint
-        # materialization as an observed metric (zero extra jobs).
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        stats = stats.observe(
-            obs, F.count(F.lit(1)).alias("n")
-        ).localCheckpoint(eager=True)
-        if obs.get["n"] <= broadcast_limit:
-            stats = F.broadcast(stats)
-    else:
+    # pin the group-sized stats: the apply join reads the pinned rows
+    # instead of re-running the exact-percentile aggregate
+    stats, m = pin_observed(stats)
+    if broadcast_limit is None or m["n"] <= broadcast_limit:
         stats = F.broadcast(stats)
     out = df.join(stats, list(group_cols))
     for c in columns:

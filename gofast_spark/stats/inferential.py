@@ -20,6 +20,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gofast_spark.pin import pin
+
 
 def _scipy_sf(kind: str, stat: float, *params) -> float | None:
     """p-value via scipy on the driver; None when scipy is unavailable."""
@@ -2251,10 +2253,9 @@ def fligner_killeen(
     # materialize the (group x distinct-d) grid once: dd/scores (whose
     # broadcast replays the lineage) and per_g both consume it, and its
     # lineage is the corpus centring pass
-    gd = (
+    gd = pin(
         centred.groupBy("__g", "__d")
         .agg(F.count(F.lit(1)).alias("__c"))
-        .localCheckpoint(eager=True)
     )
     dd = gd.groupBy("__d").agg(F.sum("__c").alias("__cd"))
     w = Window.orderBy("__d").rowsBetween(Window.unboundedPreceding, -1)

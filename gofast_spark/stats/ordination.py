@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gofast_spark.pin import pin
+
 
 def ca_residuals(
     df: DataFrame,
@@ -178,7 +180,7 @@ def dca_analysis(
             out = scores.select(
                 F.col("site").alias(site_col), "axis1", "axis2"
             )
-            out = out.localCheckpoint(eager=True)
+            out = pin(out)
             return out
         # quantile-sketch segment boundaries (no global-sort window: the
         # score frame is one row per site, which can still be huge)
@@ -202,7 +204,7 @@ def dca_analysis(
             )
         )
         # materialize before unpersisting the lineage inputs
-        out = out.localCheckpoint(eager=True)
+        out = pin(out)
         return out
     finally:
         for frame in persisted:
@@ -339,7 +341,7 @@ def dca_analysis_power(
                 F.col("axis2_dt").alias("axis2"),
             )
         )
-        out = out.localCheckpoint(eager=True)
+        out = pin(out)
         return out
     finally:
         for frame in persisted:

@@ -59,11 +59,6 @@ def _portable_uniform_int(key_col: str, seed: int):
     return F.pmod(md5_hash64(s), F.lit(2**31))
 
 
-def _portable_uniform(key_col: str, seed: int):
-    """U[0,1) dyadic uniform (exact division of the 31-bit draw)."""
-    return _portable_uniform_int(key_col, seed) / F.lit(float(2**31))
-
-
 def _poisson1_weight(h):
     """Inverse-CDF Poisson(1) draw from a 31-bit INTEGER uniform column
     (from :func:`_portable_uniform_int`) — integer comparisons only."""

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gofast_spark.pin import pin
+
 
 def nelson_aalen(
     df: DataFrame,
@@ -339,16 +341,16 @@ def cox_ph_binary(
     )
     g = F.col(group_col).cast("long")
     ev = F.col(event_col).cast("long")
-    per_t = df.groupBy(F.col(duration_col).alias("duration")).agg(
+    # pin the bins-sized rollup ONCE: every Newton iteration's
+    # broadcast state replays its lineage (the corpus groupBy) when
+    # materialized, so 4 iterations + the SE readout + sizes cost ~6
+    # corpus scans without this (guide §1.2)
+    per_t = pin(df.groupBy(F.col(duration_col).alias("duration")).agg(
         F.sum(F.lit(1) - g).alias("m0"),
         F.sum(g).alias("m1"),
         F.sum(ev * (F.lit(1) - g)).alias("d0"),
         F.sum(ev * g).alias("d1"),
-        # materialize the bins-sized rollup ONCE: every Newton
-        # iteration's broadcast state replays its lineage (the corpus
-        # groupBy) when materialized, so 4 iterations + the SE readout
-        # + sizes cost ~6 corpus scans without this (guide §1.2)
-    ).localCheckpoint(eager=True)
+    ))
     w_prev = Window.orderBy("duration").rowsBetween(
         Window.unboundedPreceding, -1
     )
@@ -447,7 +449,9 @@ def cox_ph_binary_grouped(
     )
     g = F.col(group_col).cast("long")
     ev = F.col(event_col).cast("long")
-    per_t = df.groupBy(
+    # same pin-once as cox_ph_binary: the (segments x bins) rollup
+    # feeds every per-iteration state materialization
+    per_t = pin(df.groupBy(
         F.col(segment_col).alias("seg"),
         F.col(duration_col).alias("duration"),
     ).agg(
@@ -455,9 +459,7 @@ def cox_ph_binary_grouped(
         F.sum(g).alias("m1"),
         F.sum(ev * (F.lit(1) - g)).alias("d0"),
         F.sum(ev * g).alias("d1"),
-        # same materialize-once as cox_ph_binary: the (segments x bins)
-        # rollup feeds every per-iteration state materialization
-    ).localCheckpoint(eager=True)
+    ))
     w_prev = Window.partitionBy("seg").orderBy("duration").rowsBetween(
         Window.unboundedPreceding, -1
     )

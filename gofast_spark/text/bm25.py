@@ -37,6 +37,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gofast_spark.pin import pin
 from gofast_spark.text.analysis import normalize_text
 
 
@@ -112,9 +113,7 @@ def bm25_topk(
     # the scoring join below otherwise EACH re-run the full corpus
     # explode + (doc, term) groupBy behind `postings` (guide §1.2); the
     # filtered frame is bounded by docs-containing-query-terms
-    hits = postings.where(F.col("term").isin(terms)).localCheckpoint(
-        eager=True
-    )
+    hits = pin(postings.where(F.col("term").isin(terms)))
     # df_t over the filtered postings: rows <= len(terms), broadcast back
     dfreq = hits.groupBy("term").agg(F.count("*").alias("df_t"))
     scored = (
@@ -167,9 +166,7 @@ def tfidf_topk_terms(
         # the tokenize + explode + groupBy chain for each consumer
         # (guide §1.2); a caller-supplied postings frame is left as-is
         # (the index-once-query-many contract)
-        postings = build_postings(df, id_col, text_col).localCheckpoint(
-            eager=True
-        )
+        postings = pin(build_postings(df, id_col, text_col))
     dfreq = postings.groupBy("term").agg(F.count("*").alias("df_t"))
     stats = corpus_stats(postings, id_col)
     scored = (

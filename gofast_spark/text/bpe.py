@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gofast_spark.pin import pin
 from gofast_spark.text.analysis import normalize_text
 
 
@@ -86,7 +87,7 @@ def bpe_learn_merges(
         # 'hello' -> 'h e l l o'
         F.trim(F.regexp_replace(F.col("word"), "(.)", "$1 ")).alias("sym"),
     )
-    vocab = vocab.localCheckpoint(eager=True)
+    vocab = pin(vocab)
     bests: list[DataFrame] = []
     for r in range(num_merges):
         pairs = (
@@ -121,7 +122,7 @@ def bpe_learn_merges(
         )
         # materialize each round: the next round's argmax would
         # otherwise replay every earlier round inside its own job
-        vocab = applied.localCheckpoint(eager=True)
+        vocab = pin(applied)
     out = bests[0]
     for b in bests[1:]:
         out = out.unionByName(b)

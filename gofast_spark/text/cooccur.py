@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from gofast_spark.pin import pin, pin_observed
 from gofast_spark.text.analysis import normalize_text
 
 
@@ -34,7 +35,8 @@ def bigram_pmi(
     ``min_count`` drops rare pairs (PMI is noise-dominated at tiny
     counts — the Church & Hanks caveat); ``broadcast_limit`` gates the
     unigram-table broadcast exactly like the other dedup/scaling
-    operators (above it the joins shuffle and AQE decides)."""
+    operators (above it the joins shuffle and AQE decides; ``None``
+    always broadcasts)."""
     # filter on the NORMALIZED string, not size(tk): split('') returns
     # [''] (size 1), so a size guard never fires and an empty/whitespace
     # -only document would contribute a '' unigram and inflate n_tokens
@@ -57,24 +59,16 @@ def bigram_pmi(
     # -gate count() job, the totals aggregate, and the scoring join each
     # re-ran the corpus explode + groupBy chain — 3 extra corpus scans
     # for frames that are vocabulary-sized.
-    pair_counts = (
+    pair_counts = pin(
         pairs.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("n_pair"))
-        .localCheckpoint(eager=True)
     )
-
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    uni = (
+    uni, m = pin_observed(
         toks.select(F.explode("tk").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("n_w"))
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
     )
-    # r16: the gate count rides the checkpoint as an observed metric
-    if broadcast_limit is None or obs.get["n"] <= broadcast_limit:
+    if broadcast_limit is None or m["n"] <= broadcast_limit:
         uni = F.broadcast(uni)
 
     # both totals from the materialized count tables: sum(n_w) over the
@@ -196,7 +190,9 @@ def llr_collocations(
     groupBys of it and N is its 1-row sum) — a single corpus explode
     feeds everything.  Products promote to double from the first
     multiply so int64 never overflows at corpus scale; the score is
-    rounded to 6 for engine-stable top-k ties."""
+    rounded to 6 for engine-stable top-k ties.  ``broadcast_limit``
+    gates the margin broadcasts as in :func:`bigram_pmi` (``None``
+    always broadcasts)."""
     norm = normalize_text(text_col)
     toks = df.where(F.length(norm) > 0).select(
         F.split(norm, " ").alias("tk")
@@ -213,27 +209,20 @@ def llr_collocations(
     # the total, the gate count and the scoring join — materialize it
     # once (guide §2.4; the gate's count() otherwise re-executes the
     # whole explode chain and the main plan re-runs it per consumer)
-    pc = (
+    pc = pin(
         pairs.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("n_pair"))
-        .localCheckpoint(eager=True)
     )
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    # r16: the gate count used to re-execute the w1-margin aggregate
-    # (count + join = 2 passes over pc); the margin is now pinned once
-    # with the count as an observed metric of its materialization
-    first = (
+    # the w1 margin is pinned so the gate count and the join share one
+    # pass over pc
+    first, m = pin_observed(
         pc.groupBy("w1").agg(F.sum("n_pair").alias("r1"))
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
     )
     second = pc.groupBy("w2").agg(F.sum("n_pair").alias("c1"))
     total = pc.agg(F.sum("n_pair").alias("nn"))
     # same vocabulary-size broadcast gate as bigram_pmi: above the limit
     # the margin joins shuffle and AQE decides
-    if broadcast_limit is None or obs.get["n"] <= broadcast_limit:
+    if broadcast_limit is None or m["n"] <= broadcast_limit:
         first, second = F.broadcast(first), F.broadcast(second)
 
     j = (
@@ -316,45 +305,27 @@ def ngram_novelty(
     # count table first — type/occurrence novelty then read off ONE
     # anti-join of vocabulary-sized frames: count(novel types) and
     # sum(their occurrence counts) are the same integers as the old
-    # per-occurrence anti-join by definition of the grouping.
-    # r16: all five scalar readouts ride the three checkpoint
-    # materializations as observed metrics — zero separate driver
-    # actions (they were 5: three counts + two sum collects)
-    from pyspark.sql import Observation
-
-    obs_train, obs_test, obs_novel = Observation(), Observation(), Observation()
-    train_set = (
-        bigrams(base.where(F.col("id") % holdout_mod != 0))
-        .distinct()
-        .observe(obs_train, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+    # per-occurrence anti-join by definition of the grouping.  The five
+    # scalar readouts are observed metrics of the three pins.
+    train_set, m_train = pin_observed(
+        bigrams(base.where(F.col("id") % holdout_mod != 0)).distinct()
     )
-    test_cnt = (
+    occ = F.coalesce(F.sum("__n"), F.lit(0))
+    test_cnt, m_test = pin_observed(
         bigrams(base.where(F.col("id") % holdout_mod == 0))
         .groupBy("bg")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .observe(
-            obs_test,
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum("__n"), F.lit(0)).alias("occ"),
-        )
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).alias("__n")),
+        occ=occ,
     )
-    novel_cnt = (
-        test_cnt.join(train_set, "bg", "left_anti")
-        .observe(
-            obs_novel,
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum("__n"), F.lit(0)).alias("occ"),
-        )
-        .localCheckpoint(eager=True)
+    _, m_novel = pin_observed(
+        test_cnt.join(train_set, "bg", "left_anti"), occ=occ
     )
     spark = df.sparkSession
-    n_train = obs_train.get["n"]
-    n_test = obs_test.get["n"]
-    n_novel = obs_novel.get["n"]
-    occ_test = obs_test.get["occ"]
-    occ_novel = obs_novel.get["occ"]
+    n_train = m_train["n"]
+    n_test = m_test["n"]
+    n_novel = m_novel["n"]
+    occ_test = m_test["occ"]
+    occ_novel = m_novel["occ"]
     return spark.createDataFrame(
         [(
             n_train, n_test, n_novel,

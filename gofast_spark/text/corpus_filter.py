@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from gofast_spark.pin import pin
 from gofast_spark.text.analysis import EN_STOPWORDS, _stopword_hits
 from gofast_spark.text.repetition import bound_signals
 
@@ -40,11 +41,9 @@ def stage_boundary(df: DataFrame, *, stage_sink: str | None = None) -> DataFrame
     """Executable stage-boundary contract for multi-stage corpus builds
     (r12 verdict ask #4).
 
-    ``stage_sink=None`` (toy/test default): ``localCheckpoint(eager=True)``
-    — pins partitioning and truncates lineage in one job, but the
-    blocks are EXECUTOR-LOCAL and non-replayable: a lost executor loses
-    the stage.  Fine at sf0.1 on local[32]; wrong for a 1000-executor
-    100-TB build.
+    ``stage_sink=None`` (toy/test default): :func:`gofast_spark.pin.pin`
+    — one job, lineage truncated, but executor-local and not
+    replayable (see its docstring).
 
     ``stage_sink='<path or warehouse table>'``: write the frame as
     parquet and read it back — the production layout.  Replayable and
@@ -62,7 +61,7 @@ def stage_boundary(df: DataFrame, *, stage_sink: str | None = None) -> DataFrame
     directories — r13 judge advice.)
     """
     if stage_sink is None:
-        return df.localCheckpoint(eager=True)
+        return pin(df)
     spark = df.sparkSession
     if "/" in stage_sink:
         df.write.mode("overwrite").parquet(stage_sink)
@@ -88,7 +87,7 @@ def corpus_filter(
     ``None`` disables that rule.
 
     Consumption contract: materialize the tagged frame (write it, or
-    ``localCheckpoint`` at test scale) BEFORE ``.where('keep')``.
+    ``pin`` it at test scale) BEFORE ``.where('keep')``.
     Catalyst collapses the signal projections into a downstream
     Filter, where each rule conjunct re-derives the full battery
     (whole-stage CSE does not survive the merged tree — measured 53 s

@@ -41,6 +41,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gofast_spark.operators.mixture import _U_BUCKETS, uniform_hash
+from gofast_spark.pin import pin
 from gofast_spark.text.features import hashed_tf_sparse
 
 _MICRO = 1_000_000
@@ -124,7 +125,7 @@ def dsir_logweights(
         raise ValueError("pass exactly one of target / target_ids")
     raw_tf = hashed_tf_sparse(raw, id_col=id_col, text_col=text_col, dim=dim)
     if eager:
-        raw_tf = raw_tf.localCheckpoint(eager=True)
+        raw_tf = pin(raw_tf)
     if target_ids is not None:
         tgt_tf = raw_tf.join(
             target_ids.select(F.col(id_col).alias("__tid")),

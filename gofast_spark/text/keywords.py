@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gofast_spark.ml.graph import pagerank
+from gofast_spark.pin import pin, pin_observed
 from gofast_spark.text.analysis import EN_STOPWORDS, normalize_text
 
 __all__ = ["textrank_keywords"]
@@ -100,7 +101,9 @@ def rake_keywords(
     the phrase list is a split + trim.  Word stats are one explode +
     groupBy (vocab-sized); word scores are exact integer ratios
     quantized to micro-units so each phrase's score SUM is an exact
-    bigint — engine-reproducible top-k with phrase tie-break."""
+    bigint — engine-reproducible top-k with phrase tie-break.  The word
+    stats are broadcast into the phrase join while they have at most
+    ``broadcast_limit`` rows (``None`` always broadcasts)."""
     norm = normalize_text(text_col)
     alt = "|".join(stopwords)
     padded = F.concat(
@@ -121,7 +124,7 @@ def rake_keywords(
     # count — and its lineage is the expensive stopword-alternation
     # regexp pass over the corpus.  Materialize it once so the regex
     # battery runs one time instead of four (guide §1.2/§2.4).
-    phrases = phrases.localCheckpoint(eager=True)
+    phrases = pin(phrases)
 
     words = phrases.select(
         "phrase",
@@ -140,20 +143,10 @@ def rake_keywords(
             * F.lit(1e6) + F.lit(0.5)
         ).cast("bigint").alias("score_u"),
     )
-    # r16: the broadcast-gate count used to re-execute the vocab-sized
-    # aggregate (and the scoring join re-ran it a third time); the
-    # count now rides a checkpoint materialization as an observed
-    # metric — the aggregate runs ONCE
-    if broadcast_limit is not None:
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        stats = stats.observe(
-            obs, F.count(F.lit(1)).alias("n")
-        ).localCheckpoint(eager=True)
-        if obs.get["n"] <= broadcast_limit:
-            stats = F.broadcast(stats)
-    else:
+    # pin the vocab-sized aggregate so the gate and the scoring join
+    # share one run of it
+    stats, m = pin_observed(stats)
+    if broadcast_limit is None or m["n"] <= broadcast_limit:
         stats = F.broadcast(stats)
 
     pw = phrases.select(
